@@ -831,11 +831,13 @@ def _q_hll_merged_distinct(spark, sf_dir):
             F.count_distinct("user_id").alias("exact_distinct"),
         )
     )
-    rel_err = F.abs(F.col("distinct_est") - F.col("exact_distinct")) / F.col(
-        "exact_distinct"
-    )
+    # full_outer with -1 sentinels: a partition missing from either
+    # side gets rel_err >= 1, fails bound_ok and flips the row count
+    est_n = F.coalesce(F.col("distinct_est"), F.lit(-1))
+    exact_n = F.coalesce(F.col("exact_distinct"), F.lit(-1))
+    rel_err = F.abs(est_n - exact_n) / F.abs(exact_n)
     return (
-        est.join(exact, "partition")
+        est.join(exact, "partition", "full_outer")
         .select(
             "partition", "n_rows", "distinct_est", "exact_distinct",
             F.round(rel_err, 6).alias("rel_err"),

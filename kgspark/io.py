@@ -18,10 +18,14 @@ Layout:
     <warehouse>/<table>/s0000/  (parquet dir per snapshot)
 
 A snapshot is committed atomically by writing the parquet dir first and
-renaming a temp manifest over the old one last. `input_snapshot` records
-which upstream snapshot a stage consumed — the resume check
-(`find_snapshot`) skips a stage when a committed snapshot for the same
-input already exists (north rule: resumable from checkpoint).
+renaming a temp manifest over the old one last. Each snapshot entry
+records the schema a read of its directory returns, so reads hand Spark
+that schema instead of inferring it from parquet footers: inference is
+a Spark job per read, and a query reads several tables.
+`input_snapshot` records which upstream snapshot a stage consumed — the
+resume check (`find_snapshot`) skips a stage when a committed snapshot
+for the same input already exists (north rule: resumable from
+checkpoint).
 """
 
 from __future__ import annotations
@@ -33,6 +37,43 @@ import tempfile
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _nullable(dt: DataType) -> DataType:
+    """`dt` with every field, element and value nullable — what parquet
+    schema inference returns for a written column."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _merged_schema(entries: list[dict[str, Any]]) -> StructType | None:
+    """The schema a mergeSchema read of these snapshots infers, from the
+    schemas recorded at commit: fields in first-seen order, as parquet's
+    schema merge orders them. None — infer instead — when an entry was
+    committed before schemas were recorded, or when snapshots disagree
+    on a column (a type change, or an added column on a partitioned
+    table, whose partition columns Spark keeps last)."""
+    if any("schema" not in e for e in entries):
+        return None
+    first = entries[0]["schema"]
+    if all(e["schema"] == first for e in entries):
+        return StructType.fromJson(first)
+    if any(e.get("partition_by") for e in entries):
+        return None
+    fields: dict[str, StructField] = {}
+    for e in entries:
+        for f in StructType.fromJson(e["schema"]).fields:
+            if fields.setdefault(f.name.lower(), f) != f:
+                return None
+    return StructType(list(fields.values()))
 
 
 class TableIO:
@@ -77,15 +118,12 @@ class TableIO:
         manifest = self._load_manifest(table)
         snap_id = f"s{len(manifest['snapshots']):04d}"
         path = os.path.join(self.warehouse, table, snap_id)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
         entry: dict[str, Any] = {
             "id": snap_id,
             "path": path,
             "input_snapshot": input_snapshot,
             "metadata": metadata or {},
+            **self._write(df, path, partition_by),
         }
         if stats_cols:
             from pyspark.sql import functions as F  # noqa: PLC0415
@@ -98,7 +136,7 @@ class TableIO:
                     F.max(c).alias(f"__max_{c}"),
                 ]
             rows = (
-                spark.read.parquet(path)
+                self._scan(spark, [entry])
                 .groupBy(F.input_file_name().alias("__file"))
                 .agg(*aggs)
                 .collect()
@@ -114,6 +152,41 @@ class TableIO:
         manifest["current"] = snap_id
         self._store_manifest(table, manifest)
         return snap_id
+
+    @staticmethod
+    def _write(
+        df: DataFrame, path: str, partition_by: list[str] | None = None
+    ) -> dict[str, Any]:
+        """Write a snapshot directory; returns the manifest fields that
+        describe its layout: the schema an inferring read of `path`
+        returns (the written columns made nullable, partition columns
+        last with the types Spark infers from the directory names) and
+        the partition columns. Giving the data columns lets Spark skip
+        the footer scan; the partition columns come from a file
+        listing, so recording the schema launches no job."""
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+        data = StructType(
+            [f for f in df.schema.fields if f.name not in (partition_by or ())]
+        )
+        read = df.sparkSession.read.schema(_nullable(data)).parquet(path)
+        return {"schema": read.schema.jsonValue(), "partition_by": partition_by or []}
+
+    def _scan(self, spark: SparkSession, entries: list[dict[str, Any]]) -> DataFrame:
+        """Read snapshot directories with the schema recorded at commit:
+        no schema-inference job. Snapshots committed before schemas
+        were recorded keep inference, merged across snapshots."""
+        paths = [e["path"] for e in entries]
+        schema = _merged_schema(entries)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(*paths)
+        # mergeSchema: snapshots may span a schema evolution (a column
+        # added in a later commit) — the Iceberg add-column analog;
+        # old rows surface NULL for new columns instead of the union
+        # failing or silently adopting one file's schema
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     # -- multi-table transactions -----------------------------------------
     def _txn_path(self) -> str:
@@ -157,13 +230,13 @@ class TableIO:
             manifest = self._load_manifest(table)
             snap_id = f"s{len(manifest['snapshots']):04d}"
             path = os.path.join(self.warehouse, table, snap_id)
-            df.write.mode("overwrite").parquet(path)
             manifest["snapshots"].append(
                 {
                     "id": snap_id,
                     "path": path,
                     "input_snapshot": None,
                     "metadata": {"pending_txn": True},
+                    **self._write(df, path),
                 }
             )
             self._store_manifest(table, manifest)  # current unchanged
@@ -249,7 +322,7 @@ class TableIO:
             raise FileNotFoundError(
                 f"table {table} snapshot {snap_id} has been expired"
             )
-        return spark.read.parquet(entry["path"])
+        return self._scan(spark, [entry])
 
     def read_pruned(
         self,
@@ -304,16 +377,10 @@ class TableIO:
         only tables (e.g. `_lineage`, where each run commits only its
         delta instead of rewriting history)."""
         manifest = self._load_manifest(table)
-        paths = [
-            s["path"] for s in manifest["snapshots"] if not s.get("expired")
-        ]
-        if not paths:
+        live = [s for s in manifest["snapshots"] if not s.get("expired")]
+        if not live:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        # mergeSchema: snapshots may span a schema evolution (a column
-        # added in a later commit) — the Iceberg add-column analog;
-        # old rows surface NULL for new columns instead of the union
-        # failing or silently adopting one file's schema
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._scan(spark, live)
 
     def accumulated_snapshots(self, table: str) -> list[dict[str, Any]]:
         """The snapshot entries that make up the table's accumulated
@@ -339,8 +406,7 @@ class TableIO:
         """Read the accumulated state of a table maintained by
         incremental appends (Iceberg analog: the current snapshot of an
         append-written table). See accumulated_snapshots."""
-        paths = [s["path"] for s in self.accumulated_snapshots(table)]
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._scan(spark, self.accumulated_snapshots(table))
 
     def current_snapshot(self, table: str) -> str | None:
         return self._load_manifest(table)["current"]
@@ -506,7 +572,7 @@ class TableIO:
         as Iceberg (rewrite, then expire). Returns the new snapshot id.
         """
         snaps = self.accumulated_snapshots(table)
-        df = spark.read.parquet(*[s["path"] for s in snaps])
+        df = self._scan(spark, snaps)
         if num_files is None:
             n = df.count()
             num_files = max(1, -(-n // target_rows_per_file))

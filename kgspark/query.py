@@ -7,13 +7,30 @@ dot product, TakeOrderedAndProject for top-k) — no Python in the hot
 path. The query vector is a literal, so the top-k scan is a single
 narrow pass over the embeddings table with no shuffle before the final
 ordered take.
+
+No query starts a Python worker. Query-side constants (terms, hit
+chunk ids, the seed entity, BM25 corpus scalars) enter plans as `isin`
+filters or literal columns; the few small frames built on the driver
+(query char-grams, the collected top-k hits) are Arrow tables, which
+plan as a LocalRelation. A `createDataFrame` from a Python list would
+plan as a PythonRDD scan and start Python workers on every job that
+reads it.
+
+Shapes (tests/test_query.py pins the job counts on a small warehouse):
+  - graphrag_search runs the fused top-k once, collects its <= k rows
+    and returns them as a local frame; entity expansion filters the
+    mentions on the hit chunk ids.
+  - related_entities seeds hop 1 with a pushed-down filter on the lazy
+    undirected edge union and checkpoints only each hop's frontier,
+    never the edge table; the frontier's row count is observed during
+    its checkpoint job.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from . import KEYWORD_WEIGHT, MAX_DEPTH, TOP_K, VECTOR_WEIGHT
 
@@ -117,17 +134,13 @@ def keyword_scores(
     """Keyword top-k (reference O20, elasticsearch_store.py:138-178),
     as summed term frequency of the query's tokens; for the reference's
     `fuzziness: AUTO` behavior use keyword_scores_fuzzy (index path).
-    Inverted-index shape: explode(split(lower(text))) -> term join ->
-    tf sum. Term list is tiny -> broadcast join."""
+    Inverted-index shape: explode(split(lower(text))) -> term filter ->
+    tf sum. The term list is tiny, so it is an `isin` filter."""
     terms = query_terms(query)
     if not terms:
         return chunks.select(
             F.col(id_col), F.lit(0.0).alias("score")
         ).limit(0)
-    spark = chunks.sparkSession
-    terms_df = F.broadcast(
-        spark.createDataFrame([(t,) for t in set(terms)], "term string")
-    )
     tokens = chunks.select(
         F.col(id_col),
         F.explode(
@@ -137,7 +150,7 @@ def keyword_scores(
         ).alias("term"),
     )
     return (
-        tokens.join(terms_df, "term")
+        tokens.filter(F.col("term").isin(terms))
         .groupBy(id_col)
         .agg(F.count("*").cast("double").alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
@@ -179,15 +192,6 @@ def keyword_scores_bm25(
         return index.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
     if dl is None:
         dl = index.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    if n_docs is not None and avgdl is not None:
-        stats = index.sparkSession.createDataFrame(
-            [(float(n_docs), float(avgdl))], "n_docs double, avgdl double"
-        )
-    else:
-        stats = dl.agg(
-            F.count("*").cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        )
     matched = index.filter(F.col("term").isin(terms))
     dfs = matched.groupBy("term").agg(
         F.count("*").cast("double").alias("df")
@@ -200,11 +204,24 @@ def keyword_scores_bm25(
         F.col("tf") * (k1 + 1.0)
         / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
     )
+    scored = matched.join(F.broadcast(dfs), "term").join(dl, id_col)
+    if n_docs is not None and avgdl is not None:
+        scored = scored.select(
+            "*",
+            F.lit(float(n_docs)).alias("n_docs"),
+            F.lit(float(avgdl)).alias("avgdl"),
+        )
+    else:
+        scored = scored.crossJoin(
+            F.broadcast(
+                dl.agg(
+                    F.count("*").cast("double").alias("n_docs"),
+                    F.avg("dl").alias("avgdl"),
+                )
+            )
+        )
     return (
-        matched.join(F.broadcast(dfs), "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
+        scored.groupBy(id_col)
         .agg(F.sum(part).alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
@@ -256,6 +273,21 @@ def read_bm25_stats(
     meta = io.snapshot_metadata(table, snapshot)
     dl = io.read(spark, table, snapshot)
     return dl, float(meta["n_docs"]), float(meta["avgdl"])
+
+
+def _local_frame(spark, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-built frame as an Arrow table: it plans as a
+    LocalRelation and starts no Python worker, unlike a list-backed
+    `createDataFrame`."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import StructType  # noqa: PLC0415
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _py_char_grams(term: str, q: int) -> list[str]:
@@ -355,7 +387,7 @@ def fuzzy_term_weights(
         for g in _py_char_grams(t, q)
     ]
     qg = F.broadcast(
-        spark.createDataFrame(qgrams, "qterm string, gram string, q int")
+        _local_frame(spark, qgrams, "qterm string, gram string, q int")
     )
     if vocab_grams is not None:
         vg = vocab_grams
@@ -373,8 +405,8 @@ def fuzzy_term_weights(
         .select("term", F.lit(float(fuzzy_weight)).alias("weight"))
         .distinct()
     )
-    exact = spark.createDataFrame(
-        [(t_, 1.0) for t_ in terms], "term string, weight double"
+    exact = _local_frame(
+        spark, [(t_, 1.0) for t_ in terms], "term string, weight double"
     )
     return (
         exact.unionByName(fuzzy)
@@ -501,16 +533,13 @@ def entities_from_chunks(
 
     Faithful quirk: the var-length pattern ends at an entity, so only
     odd hop counts can match — with the default max_depth=2 the result
-    equals depth 1 (SURVEY.md §3.2-4). Implemented as iterative frontier
-    hash-joins (BFS), the same shape as CC.
+    equals depth 1 (SURVEY.md §3.2-4). The first hop is an `isin` filter
+    on the hit chunk ids; deeper hops are iterative frontier hash-joins
+    (BFS), the same shape as CC.
     """
-    spark = mentions.sparkSession
-    frontier_chunks = F.broadcast(
-        spark.createDataFrame([(c,) for c in chunk_ids], "chunk_id string")
-    )
     ment = mentions.select("chunk_id", "name")
     entities = (
-        ment.join(frontier_chunks, "chunk_id").select("name").distinct()
+        ment.filter(F.col("chunk_id").isin(chunk_ids)).select("name").distinct()
         .withColumn("hops", F.lit(1))
     )
     depth = 1
@@ -553,10 +582,10 @@ def entities_from_chunks(
 #: on a dense KG the hop-2 frontier is unbounded (the reference LIMITs
 #: only final results, neo4j_store.py:385), so a forced broadcast of a
 #: multi-million-row frontier would ship it whole to every executor.
-#: Below the cap the hint saves the per-hop shuffle of the (huge,
-#: checkpointed) edge table; above it the join falls back to a plain
-#: equi-join and AQE decides at runtime. The count is free: the
-#: frontier is already eagerly checkpointed per round.
+#: Below the cap the hint saves the per-hop shuffle of the (huge) edge
+#: table; above it the join falls back to a plain
+#: equi-join and AQE decides at runtime. The count is free: it is an
+#: observed metric of the job that checkpoints the frontier each round.
 FRONTIER_BROADCAST_MAX_ROWS = 100_000
 
 
@@ -601,48 +630,48 @@ def related_entities(
     reference may emit several rows for one entity when distinct
     rel-type paths exist; one canonical row per entity is the
     deterministic-under-parallelism choice). With `kg_nodes` given the
-    output adds labels / properties scalars like entities_from_chunks."""
-    undirected = (
+    output adds labels / properties scalars like entities_from_chunks.
+
+    The undirected edge union stays lazy: each hop re-reads the edge
+    table rather than materializing a copy of every edge per query.
+    Duplicate edges need no distinct(), because the per-hop groupBy
+    keeps one path per entity."""
+    undirected = kg_edges.select(
+        F.col("subj").alias("a"), F.col("obj").alias("b"), "pred"
+    ).union(
         kg_edges.select(
-            F.col("subj").alias("a"), F.col("obj").alias("b"), "pred"
+            F.col("obj").alias("a"), F.col("subj").alias("b"), "pred"
         )
-        .union(
-            kg_edges.select(
-                F.col("obj").alias("a"), F.col("subj").alias("b"), "pred"
+    )
+    # hop 1: a filter the scan pushes down to both sides of the union
+    stepped = undirected.filter(F.col("a") == entity_name).select(
+        F.col("b").alias("a"), F.array(F.col("pred")).alias("path")
+    )
+    reached = stepped.limit(0)
+    seen: DataFrame | None = None
+    for depth in range(max_depth):
+        if depth:
+            stepped = _frontier_step(
+                undirected, frontier, frontier_rows, frontier_broadcast_max
             )
-        )
-        .distinct()
-        # materialize once: every hop joins against this frame, and
-        # without the checkpoint each round re-runs the union+distinct
-        # shuffle (and, upstream, the edge materialization)
-        .localCheckpoint(eager=True)
-    )
-    spark = kg_edges.sparkSession
-    frontier = spark.createDataFrame([(entity_name,)], "a string").withColumn(
-        "path", F.array().cast("array<string>")
-    )
-    seen = frontier.select("a")
-    reached: DataFrame | None = None
-    frontier_rows = 1  # the seed entity
-    for _ in range(max_depth):
-        stepped = _frontier_step(
-            undirected, frontier, frontier_rows, frontier_broadcast_max
-        )
         nxt = (
             stepped.groupBy("a")
             .agg(F.min("path").alias("path"))  # lexicographic tie-break
-            .join(seen, "a", "left_anti")
-        ).localCheckpoint(eager=True)
-        # count() on the checkpointed frame is metadata-cheap and
-        # feeds the next hop's broadcast guard (replaces isEmpty())
-        frontier_rows = nxt.count()
+            .filter(~F.col("a").eqNullSafe(entity_name))
+        )
+        if seen is not None:
+            nxt = nxt.join(seen, "a", "left_anti")
+        # the row count is observed by the checkpoint's own job, with no
+        # count job; it feeds the next hop's broadcast guard
+        rows = Observation()
+        frontier = nxt.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        frontier_rows = rows.get["n"]
         if frontier_rows == 0:
             break
-        seen = seen.union(nxt.select("a"))
-        reached = nxt if reached is None else reached.unionByName(nxt)
-        frontier = nxt
-    if reached is None:
-        reached = spark.createDataFrame([], "a string, path array<string>")
+        seen = frontier.select("a") if seen is None else seen.union(frontier.select("a"))
+        reached = reached.unionByName(frontier)
     out = reached.select(
         F.col("a").alias("name"),
         F.array_join("path", ",").alias("rel_types"),
@@ -691,8 +720,11 @@ def graphrag_search(
       4. entity expansion from the hit chunks (neo4j_store.py:261-345)
 
     Returns {"hits": fused top-k with scores, "entities": expanded
-    entity names}. The answer-generation step (graphrag.py:196-222) is
-    out of scope per SURVEY.md O25 (non-deterministic external LLM).
+    entity names}. The fused top-k runs once: its <= k rows are collected
+    for the entity expansion and returned as a local (Arrow) frame, so
+    collecting `hits` runs no second retrieval. The answer-generation
+    step (graphrag.py:196-222) is out of scope per SURVEY.md O25
+    (non-deterministic external LLM).
     """
     from .textops import embed_text  # noqa: PLC0415
 
@@ -721,11 +753,13 @@ def graphrag_search(
         kw_hits = keyword_scores_from_index(inverted_index, query_text, k=top_k * 2)
     else:
         kw_hits = keyword_scores(chunks, query_text, k=top_k * 2)
-    hits = fuse(
+    fused = fuse(
         vec_hits, kw_hits, k=top_k,
         vector_weight=vector_weight, keyword_weight=keyword_weight,
     )
-    hit_ids = [r["chunk_id"] for r in hits.select("chunk_id").collect()]
+    top = fused.toArrow()
+    hits = embeddings.sparkSession.createDataFrame(top, fused.schema)
+    hit_ids = top.column("chunk_id").to_pylist()
     entities = entities_from_chunks(
         mentions, hit_ids, max_depth=max_depth, kg_nodes=kg_nodes
     )

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -16,3 +17,24 @@ def spark():
         shuffle_partitions=8,
     )
     yield spark
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """`run(fn)` -> (fn(), number of Spark jobs fn launched), counted
+    through a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store learns of jobs through the asynchronous
+        # listener bus: drain it before counting
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -396,3 +396,111 @@ def test_schema_evolution_across_append_snapshots(spark, tmp_path):
     assert rows == {1: None, 2: 9.5}
     allr = io.read_all(spark, "t")
     assert set(allr.columns) == {"k", "v", "score"}
+
+
+def _inferred(spark, io, table, snapshots):
+    paths = [s["path"] for s in io._load_manifest(table)["snapshots"]
+             if s["id"] in snapshots]
+    return spark.read.option("mergeSchema", "true").parquet(*paths).schema
+
+
+class TestRecordedSchemas:
+    """Each snapshot records at commit the schema an inferring read of
+    it returns, so reads pass it to Spark and launch no schema-inference
+    job (a footer scan per read). Pinned here: the recorded schema is
+    exactly the one mergeSchema inference gives, on a plain table, a
+    partitioned one, an appended one and a schema-evolved one; and
+    snapshots committed before schemas were recorded still read."""
+
+    def _nested_df(self, spark, rows):
+        from pyspark.sql import functions as F
+
+        # non-nullable nested fields, which parquet reads back nullable
+        return spark.createDataFrame(rows, "k long, v string").select(
+            F.col("k"), F.col("v"),
+            F.array(F.col("k").cast("float")).alias("emb"),
+            F.create_map(F.col("v"), F.col("v")).alias("props"),
+            F.struct(F.lit(1).alias("a"), F.array(F.col("v")).alias("b")).alias("s"),
+        )
+
+    def _evolved(self, spark, io):
+        """Two snapshots; the appended one adds a column."""
+        s0 = io.commit("t", spark.createDataFrame([(1, "a")], "k long, v string"))
+        s1 = io.commit(
+            "t",
+            spark.createDataFrame([(2, "b", 9.5)], "k long, v string, score double"),
+            metadata={"mode": "append"},
+        )
+        return {s0, s1}
+
+    def _check(self, spark, spark_jobs, io, table, snapshots, read):
+        got, jobs = spark_jobs(read)
+        assert jobs == 0
+        assert got.schema == _inferred(spark, io, table, snapshots)
+        return got
+
+    def test_plain_table(self, spark, spark_jobs, tmp_path):
+        io = TableIO(str(tmp_path / "wh"))
+        s0 = io.commit("t", self._nested_df(spark, [(1, "a"), (2, "b")]))
+        for read in (
+            lambda: io.read(spark, "t"),
+            lambda: io.read_all(spark, "t"),
+            lambda: io.read_accumulated(spark, "t"),
+        ):
+            got = self._check(spark, spark_jobs, io, "t", {s0}, read)
+            assert sorted(r["k"] for r in got.collect()) == [1, 2]
+
+    def test_partitioned_table(self, spark, spark_jobs, tmp_path):
+        """Partition columns come last, with the type Spark infers from
+        the directory names (a written long reads back as int)."""
+        io = TableIO(str(tmp_path / "wh"))
+        df = spark.createDataFrame(
+            [(i, i % 3, f"v{i}") for i in range(12)], "x int, cell long, v string"
+        )
+        s0 = io.commit("t", df, partition_by=["cell"])
+        got = self._check(spark, spark_jobs, io, "t", {s0}, lambda: io.read(spark, "t"))
+        assert got.columns == ["x", "v", "cell"]
+        assert dict(got.dtypes)["cell"] == "int"
+        assert got.filter("cell = 2").count() == 4
+        self._check(spark, spark_jobs, io, "t", {s0}, lambda: io.read_accumulated(spark, "t"))
+
+    def test_appended_table(self, spark, spark_jobs, tmp_path):
+        io = TableIO(str(tmp_path / "wh"))
+        s0 = io.commit("t", self._nested_df(spark, [(1, "a")]))
+        s1 = io.commit(
+            "t", self._nested_df(spark, [(2, "b")]), metadata={"mode": "append"}
+        )
+        for read in (
+            lambda: io.read_all(spark, "t"),
+            lambda: io.read_accumulated(spark, "t"),
+        ):
+            got = self._check(spark, spark_jobs, io, "t", {s0, s1}, read)
+            assert sorted(r["k"] for r in got.collect()) == [1, 2]
+
+    def test_schema_evolved_table(self, spark, spark_jobs, tmp_path):
+        io = TableIO(str(tmp_path / "wh"))
+        snaps = self._evolved(spark, io)
+        for read in (
+            lambda: io.read_all(spark, "t"),
+            lambda: io.read_accumulated(spark, "t"),
+        ):
+            got = self._check(spark, spark_jobs, io, "t", snaps, read)
+            assert {r["k"]: r["score"] for r in got.collect()} == {1: None, 2: 9.5}
+
+    def test_manifest_without_recorded_schemas_still_reads(self, spark, tmp_path):
+        import json
+
+        io = TableIO(str(tmp_path / "wh"))
+        snaps = self._evolved(spark, io)
+        path = io._manifest_path("t")
+        with open(path) as f:
+            manifest = json.load(f)
+        for s in manifest["snapshots"]:
+            del s["schema"], s["partition_by"]
+        with open(path, "w") as f:
+            json.dump(manifest, f)
+        acc = io.read_accumulated(spark, "t")
+        assert acc.schema == _inferred(spark, io, "t", snaps)
+        assert {r["k"]: r["score"] for r in acc.collect()} == {1: None, 2: 9.5}
+        assert io.read(spark, "t").columns == ["k", "v", "score"]
+        assert sorted(r["k"] for r in io.read_all(spark, "t").collect()) == [1, 2]

@@ -497,3 +497,114 @@ def test_bm25_stats_materialized_resume_parity_pushdown(spark, tmp_path, monkeyp
     assert dl_scans, "doc lengths must come from the materialized table"
     for ln in dl_scans:
         assert "term#" not in ln  # never re-derived from the index
+
+
+@pytest.fixture(scope="module")
+def warehouse(spark, tmp_path_factory):
+    """A small committed warehouse: (table reader, the k-hop seed with
+    the most edges)."""
+    from kgspark.fixtures import pages_df
+    from kgspark.pipeline import Pipeline
+
+    pipe = Pipeline(str(tmp_path_factory.mktemp("query_wh") / "wh"))
+    pipe.run(spark, pages_df(spark, 40), "query-tests:40")
+
+    def rd(table):
+        return pipe.io.read_accumulated(spark, table)
+
+    seed = (
+        rd("kg_edges").groupBy("subj").count()
+        .orderBy(F.desc("count"), "subj").first()["subj"]
+    )
+    return rd, seed
+
+
+def _search(rd, text="court contract agreement"):
+    """A hybrid search over freshly read tables, as `kgctl search` runs it."""
+    from kgspark import stages
+
+    return query.graphrag_search(
+        rd("chunks"), rd("embeddings"), stages.mentions_of(rd("extracted")),
+        text, inverted_index=rd("inverted_index"), kg_nodes=rd("kg_nodes"),
+    )
+
+
+def _khop(rd, seed):
+    return query.related_entities(
+        rd("kg_edges"), seed, max_depth=2, kg_nodes=rd("kg_nodes")
+    )
+
+
+def _rdd_leaves(df) -> set[int]:
+    """Ids of the RDDs behind the LogicalRDD leaves of df's plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
+
+
+def _record_plans(monkeypatch, spark):
+    """Record every frame the query executes (checkpoints, counts,
+    collects) and the RDDs its own checkpoints produce."""
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    executed, checkpoints = [], set()
+
+    def spy(name):
+        orig = getattr(DataFrame, name)
+
+        def wrapped(self, *a, **k):
+            executed.append(self)
+            out = orig(self, *a, **k)
+            if name == "localCheckpoint":
+                checkpoints.update(_rdd_leaves(out))
+            return out
+
+        monkeypatch.setattr(DataFrame, name, wrapped)
+
+    for name in ("localCheckpoint", "count", "collect", "toArrow"):
+        spy(name)
+    return executed, checkpoints
+
+
+def test_query_plans_scan_no_python_rdd(spark, warehouse, monkeypatch):
+    """No query plan reads an RDD other than the query's own frontier
+    checkpoints. A `createDataFrame` from a Python list plans as a
+    LogicalRDD over a PythonRDD and starts Python workers on every job
+    that scans it; the checkpointed hop frontiers of related_entities
+    are LogicalRDDs too, with their lineage cut at the checkpoint."""
+    rd, seed = warehouse
+    executed, checkpoints = _record_plans(monkeypatch, spark)
+    out = _search(rd)
+    rel = _khop(rd, seed)
+    final = [out["hits"], out["entities"], rel]
+    for df in executed + final:
+        assert _rdd_leaves(df) <= checkpoints, df._jdf.queryExecution().analyzed().toString()
+    # the search checkpoints nothing, and its hits are a local relation
+    assert not _rdd_leaves(out["hits"]) and not _rdd_leaves(out["entities"])
+    assert "LocalRelation" in out["hits"]._jdf.queryExecution().analyzed().toString()
+    assert len(checkpoints) == 2  # one per hop
+
+
+def test_query_job_counts_pinned(warehouse, spark_jobs):
+    """Measured Spark-job counts of one search and one depth-2 k-hop,
+    collected as a client does (local[4], 8 shuffle partitions). Search
+    (5): the fused top-k runs once, as a shuffle stage and a result job;
+    collecting its hits, a local frame, runs none; the entity expansion
+    is a shuffle stage, a broadcast and a result job. K-hop (8): per hop
+    the jobs of the frontier checkpoint (its shuffle stage and result,
+    plus the frontier and seen-set broadcasts from hop 2), whose row
+    count is an observed metric rather than a count job; then the final
+    collect and its kg_nodes broadcast. The table reads launch none, and
+    there is no edge-table checkpoint."""
+    rd, seed = warehouse
+
+    def search():
+        out = _search(rd)
+        return out["hits"].collect(), out["entities"].collect()
+
+    (hits, ents), search_jobs = spark_jobs(search)
+    rows, khop_jobs = spark_jobs(lambda: _khop(rd, seed).collect())
+    assert hits and ents and rows
+    assert (search_jobs, khop_jobs) == (5, 8)

@@ -1,7 +1,10 @@
 """Unit tests for the pure-Python core, including byte-exact parity of
-our chunker with the reference implementation loaded straight from
-/root/reference (it has no third-party imports, so it is importable)."""
+our chunker with the reference implementation loaded straight from its
+source checkout (it has no third-party imports, so it is importable).
+The reference is loaded inside the parity tests, not at import, so the
+other tests run without it; without it the parity tests fail."""
 
+import functools
 import importlib.util
 import random
 import string
@@ -12,6 +15,7 @@ from kgspark import textops
 from kgspark.fixtures import make_html, make_page, make_text
 
 
+@functools.cache
 def _load_reference_chunker():
     spec = importlib.util.spec_from_file_location(
         "ref_text_chunker", "/root/reference/src/core/text_chunker.py"
@@ -19,9 +23,6 @@ def _load_reference_chunker():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod.TextChunker
-
-
-REF_CHUNKER = _load_reference_chunker()
 
 
 def _random_text(rng: random.Random, n_words: int) -> str:
@@ -42,7 +43,7 @@ def test_chunker_matches_reference_random(seed):
     text = _random_text(rng, rng.randint(0, 400))
     size = rng.choice([50, 100, 500])
     overlap = rng.choice([0, 10, 100, 600])
-    ref = REF_CHUNKER(chunk_size=size, chunk_overlap=overlap).chunk_text(text)
+    ref = _load_reference_chunker()(chunk_size=size, chunk_overlap=overlap).chunk_text(text)
     got = textops.chunk_text(text, size, overlap)
     assert got == ref
 
@@ -62,7 +63,7 @@ def test_chunker_matches_reference_random(seed):
 )
 def test_chunker_matches_reference_edge_cases(text):
     for size, overlap in [(500, 100), (30, 10), (10, 50)]:
-        ref = REF_CHUNKER(chunk_size=size, chunk_overlap=overlap).chunk_text(text)
+        ref = _load_reference_chunker()(chunk_size=size, chunk_overlap=overlap).chunk_text(text)
         got = textops.chunk_text(text, size, overlap)
         assert got == ref
 
@@ -70,7 +71,7 @@ def test_chunker_matches_reference_edge_cases(text):
 def test_chunker_fixture_pages_match_reference():
     for doc_id in range(30):
         text = make_text(doc_id)
-        ref = REF_CHUNKER().chunk_text(text)
+        ref = _load_reference_chunker()().chunk_text(text)
         assert textops.chunk_text(text) == ref
 
 
